@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -16,14 +14,7 @@ object Bench {
     // Numeric core count for the JSON stamp/merge key; a non-numeric
     // master spec (e.g. "*") records as -1 and never merges.
     val cpusNum: Double = try cpus.toDouble catch { case _: Throwable => -1.0 }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(s"local[$cpus]", cpus)
     // Silence WindowExec's "No Partition Defined" warning for this run:
     // every unpartitioned window a graded query executes is a BOUNDED
     // whitelisted one (dictionary-rank / tiny-offsets prefix sums,
@@ -146,7 +137,7 @@ object Bench {
     // oscillator set, which couldn't keep up: r17's board recorded
     // 12.0s for a 1.0s x_fts_bm25w because the FTS family wasn't in the
     // list). Root cause is measured (BASELINE.md "Oscillator root
-    // cause" / tools/OscProbe): C2 compilation of generated whole-stage
+    // cause", 12 in-process reps at sf0.1): C2 compilation of generated whole-stage
     // classes makes rep01 2-7x steady state, converging over ~10
     // executions — a property of WHICH query warms when, not of a fixed
     // name set. Detection is per-query, in-board: after the standard
@@ -267,6 +258,24 @@ object Bench {
       }
       md.digest().take(6).map("%02x".format(_)).mkString
     } catch { case _: Throwable => "unknown" }
+    // BENCH_HISTORY.jsonl, read and parsed ONCE, before this run
+    // appends its own record: the canary baseline and the same-code
+    // board merge below both read these (raw line, parsed) pairs.
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    def num(v: JValue): Option[Double] = v match {
+      case JDouble(d) => Some(d); case JInt(i) => Some(i.toDouble)
+      case JLong(l) => Some(l.toDouble); case JDecimal(d) => Some(d.toDouble)
+      case _ => None
+    }
+    val history: Seq[(String, JValue)] = try {
+      val p = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
+      val lines = if (java.nio.file.Files.exists(p))
+        scala.jdk.CollectionConverters.ListHasAsScala(
+          java.nio.file.Files.readAllLines(p)).asScala.toSeq else Seq.empty
+      lines.flatMap(raw => try Some(raw -> JsonMethods.parse(raw)) catch { case _: Throwable => None })
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] history scan failed: ${e.getMessage}"); Seq.empty }
     // canary_ratio = median over canary queries of (this run / history
     // median). Baseline bias fix (r17 ADVICE): the canary is a COLD
     // min-of-2, so its baseline must be other cold canary measurements
@@ -275,28 +284,11 @@ object Bench {
     // exactly this reason). Per query: if ANY history record carries a
     // "canary" map value, use only those (cold-vs-cold); fall back to
     // "queries" values only while no canary-bearing history exists yet.
-    val canaryRatio: Double = try {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      def num(v: JValue): Option[Double] = v match {
-        case JDouble(d) => Some(d); case JInt(i) => Some(i.toDouble)
-        case JLong(l) => Some(l.toDouble); case JDecimal(d) => Some(d.toDouble)
-        case _ => None
-      }
-      val p = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
-      val hist = if (java.nio.file.Files.exists(p))
-        scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(p)).asScala.toSeq else Seq.empty
+    val canaryRatio: Double = {
+      val sameSf = history.map(_._2).filter(j => (j \ "sf") == JString(sfDir))
       val baselines: Map[String, Double] = canaryNames.flatMap { n =>
-        val (cold, warm) = hist.foldLeft(
-          (Vector.empty[Double], Vector.empty[Double])) { case ((c, w), raw) =>
-          try {
-            val j = JsonMethods.parse(raw)
-            if ((j \ "sf") != JString(sfDir)) (c, w)
-            else (num(j \ "canary" \ n).filter(_ > 0).fold(c)(c :+ _),
-                  num(j \ "queries" \ n).filter(_ > 0).fold(w)(w :+ _))
-          } catch { case _: Throwable => (c, w) }
-        }
+        val cold = sameSf.flatMap(j => num(j \ "canary" \ n).filter(_ > 0))
+        val warm = sameSf.flatMap(j => num(j \ "queries" \ n).filter(_ > 0))
         val vals = (if (cold.nonEmpty) cold else warm).sorted
         if (vals.isEmpty) None else Some(n -> vals((vals.size - 1) / 2))
       }.toMap
@@ -304,7 +296,7 @@ object Bench {
         baselines.get(n).map(b => t / b)
       }.sorted
       if (ratios.isEmpty) 1.0 else ratios((ratios.size - 1) / 2)
-    } catch { case _: Throwable => 1.0 }
+    }
     val drifted = canaryRatio > 1.5
     if (drifted)
       System.err.println(f"[bench] LOAD CANARY: ratio $canaryRatio%.2f > 1.5 — " +
@@ -358,50 +350,33 @@ object Bench {
       val current = (nowMs, results.map(_._2).sum,
         results.map(r => r._1 -> r._2).toMap, stamped)
       if (!mergeable) Seq(current)
-      else current +: (try {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        val p = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
-        val lines = if (java.nio.file.Files.exists(p))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(p)).asScala.toSeq else Seq.empty
-        def num(v: JValue): Option[Double] = v match {
-          case JDouble(d) => Some(d); case JInt(i) => Some(i.toDouble)
-          case JLong(l) => Some(l.toDouble); case JDecimal(d) => Some(d.toDouble)
-          case _ => None
+      else current +: history.flatMap { case (raw, j) =>
+        // Same-code identity is the src/main CONTENT hash when the
+        // record carries one (docs/test-only commits then still
+        // merge — the r16 orphaned-board fix); records predating
+        // the tree field fall back to commit-hash equality.
+        val sameCode = (j \ "tree") match {
+          case JString(t) => treeId != "unknown" && t == treeId
+          case _ => (j \ "code") == JString(codeId)
         }
-        lines.dropRight(1).flatMap { raw =>
-          try {
-            val j = JsonMethods.parse(raw)
-            // Same-code identity is the src/main CONTENT hash when the
-            // record carries one (docs/test-only commits then still
-            // merge — the r16 orphaned-board fix); records predating
-            // the tree field fall back to commit-hash equality.
-            val sameCode = (j \ "tree") match {
-              case JString(t) => treeId != "unknown" && t == treeId
-              case _ => (j \ "code") == JString(codeId)
-            }
-            val sameShape = sameCode &&
-              (j \ "sf") == JString(sfDir) &&
-              num(j \ "reps").contains(reps.toDouble) &&
-              // Core count is part of the measurement config: an 8-core
-              // and a 32-core board of the same tree are different
-              // experiments and must not min-merge (records predating
-              // the cpus stamp carry no field and are excluded).
-              num(j \ "cpus").contains(cpusNum) && cpusNum > 0 &&
-              (j \ "failed") == JArray(Nil)
-            val qm = (j \ "queries") match {
-              case JObject(fs) => fs.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
-              case _ => Map.empty[String, Double]
-            }
-            if (sameShape && qm.keySet == qNames)
-              num(j \ "value").zip(num(j \ "ts_ms"))
-                .map { case (t, ts) => (ts.toLong, t, qm, raw) }
-            else None
-          } catch { case _: Throwable => None }
+        val sameShape = sameCode &&
+          (j \ "sf") == JString(sfDir) &&
+          num(j \ "reps").contains(reps.toDouble) &&
+          // Core count is part of the measurement config: an 8-core
+          // and a 32-core board of the same tree are different
+          // experiments and must not min-merge (records predating
+          // the cpus stamp carry no field and are excluded).
+          num(j \ "cpus").contains(cpusNum) && cpusNum > 0 &&
+          (j \ "failed") == JArray(Nil)
+        val qm = (j \ "queries") match {
+          case JObject(fs) => fs.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
+          case _ => Map.empty[String, Double]
         }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] history scan failed: ${e.getMessage}"); Seq.empty })
+        if (sameShape && qm.keySet == qNames)
+          num(j \ "value").zip(num(j \ "ts_ms"))
+            .map { case (t, ts) => (ts.toLong, t, qm, raw) }
+        else None
+      }
     }
     val best = boards.minBy(_._2)
     if (best._1 != nowMs)

@@ -12,8 +12,7 @@ import graft.expressions._
   * SQL users:
   *
   * {{{
-  * val spark = SparkSession.builder()
-  *   .withExtensions(new GraftExtensions).getOrCreate()
+  * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * spark.sql("SELECT rolling_hash(text), simhash60(hashes) FROM docs")
   * }}}
   *

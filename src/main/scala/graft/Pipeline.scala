@@ -18,14 +18,14 @@ import graft.sources.CsvLoader
   *
   * Sink: a directory of parquet tables plus `schema.sql` holding the
   * exact SQLite DDL the reference would execute (CREATE TABLE with
-  * PK/FK, CREATE INDEX, CREATE VIRTUAL TABLE). The offline environment
-  * has no sqlite-jdbc jar (SURVEY §7.2.6); with one on the classpath the
-  * same DDL + DataFrames write to a real .db unchanged.
+  * PK/FK, CREATE INDEX, CREATE VIRTUAL TABLE). `SqliteCli.writeDb`
+  * executes the same DDL + DataFrames against a real .db.
   *
   * Incremental semantics (`cli.py:248-251`): if the output directory
   * already holds a table and `replaceTables` is false, fact tables
-  * append and lookup tables extend (existing ids are reused — E2's
-  * incremental contract).
+  * append. Lookup tables extend either way (existing ids are reused —
+  * E2's incremental contract); `replaceTables` drops and recreates only
+  * the fact tables and their FTS tables (K4).
   */
 object Pipeline {
 
@@ -133,7 +133,7 @@ object Pipeline {
     val existingDict: String => Option[DataFrame] = { table =>
       config.outputDir.flatMap { out =>
         val p = Paths.get(out, s"$table.parquet")
-        if (!config.replaceTables && Files.exists(p)) Some(spark.read.parquet(p.toString))
+        if (Files.exists(p)) Some(spark.read.parquet(p.toString))
         else None
       }
     }
@@ -205,7 +205,11 @@ object Pipeline {
     facts.foreach { case (name, df) =>
       val bare = df.drop(Rowid.ColName)
       val exists = config.outputDir.exists(out => Files.exists(Paths.get(out, s"$name.parquet")))
-      if (exists && config.replaceTables) ddl += SqliteDdl.dropTableSql(name)
+      if (exists && config.replaceTables) {
+        // the FTS section below recreates this table's index
+        if (config.ftsColumns.nonEmpty) ddl += s"""DROP TABLE IF EXISTS "${name}_fts""""
+        ddl += SqliteDdl.dropTableSql(name)
+      }
       if (!exists || config.replaceTables) {
         ddl += SqliteDdl.createTableWithForeignKeys(
           name, bare.schema, fkByColumn, lastOverrides, config.primaryKeys, config.indexFks)

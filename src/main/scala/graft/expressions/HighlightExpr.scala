@@ -124,14 +124,4 @@ object HighlightRaw {
       GraftShim.expression(c) +: phrases.map(p => GraftShim.expression(p.gate)),
       phrases.map(_.terms), phrases.map(_.anchored),
       phrases.map(_.groupId), phrases.map(_.groupN), open, close))
-
-  /** Single-token ungated bareword surface (the pre-r18 signature):
-    * each term is a 1-token exact phrase, always reported.
-    */
-  def highlight_raw_terms(c: Column, terms: Seq[String],
-      open: String = "<b>", close: String = "</b>"): Column = {
-    import org.apache.spark.sql.functions.lit
-    highlight_raw(c, terms.map(t => Phrase(Seq((t, false)), lit(true))),
-      open, close)
-  }
 }

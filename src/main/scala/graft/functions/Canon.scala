@@ -65,7 +65,4 @@ object Canon {
       graft.expressions.GFormat.g_format(c.cast(DoubleType))
     case _ => c.cast(StringType)
   }
-
-  /** DuckDB fragment matching [[canonicalize]] for DOUBLE input. */
-  def duckdbCanonDouble(expr: String): String = s"printf('%g', $expr)"
 }

@@ -176,7 +176,7 @@ object DateParse {
         "mg", "fo", "lb", "fy", "gd", "br", "tg", "tk", "tt", "ps",
         "as", "or")
         .map(Locale.forLanguageTag) ++
-      // Tier 5 (r18, via tools/LocaleProbe — every tag verified to
+      // Tier 5 (r18; every tag verified to
       // carry real CLDR month data in this JDK; root-fallback
       // candidates ht/sm/ny/st/tn/cv/ba print English names and are
       // excluded, as is tl, whose Spanish-derived names fil/es already

@@ -28,9 +28,6 @@ object PortableHash {
   def duckdbHash60(expr: String): String =
     s"CAST(('0x' || substring(md5($expr), 1, 15)) AS BIGINT)"
 
-  def duckdbHash60Seeded(seedExpr: String, expr: String): String =
-    duckdbHash60(s"CAST($seedExpr AS VARCHAR) || ':' || $expr")
-
   /** Prime modulus for the affine hash family. */
   val P: Long = 1000000007L
 
@@ -43,7 +40,4 @@ object PortableHash {
     */
   def affine(h: Column, k: Int): Column =
     ((h % P) * lit(2L * k + 1) + lit(12345L * k + 677L)) % P
-
-  def duckdbAffine(hExpr: String, kExpr: String): String =
-    s"((($hExpr) % ${P}) * (2 * ($kExpr) + 1) + (12345 * ($kExpr) + 677)) % ${P}"
 }

@@ -59,7 +59,7 @@ object AsOf {
     * already-partitioned side (bucketed table, prior aggregation)
     * shuffles zero times, and AQE coalesces both sides together.
     *
-    * When to prefer which (measured, AsofSkewProbe): on small BALANCED
+    * When to prefer which (measured): on small BALANCED
     * inputs the composed form's single exchange is slightly cheaper
     * (two stages of fixed overhead vs one); on HOT KEYS the exec is
     * ~1.6x faster (2M and 8M rows/side on one key) and — the part that

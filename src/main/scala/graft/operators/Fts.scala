@@ -201,18 +201,6 @@ object Fts {
     else pieces.toIndexedSeq.updated(lastTok, pieces(lastTok) + "*").mkString(" ")
   }
 
-  /** FTS5 phrase-prefix match: the `"a b"*` form — the phrase with its
-    * LAST TOKEN read as a prefix (a star INSIDE the quotes is a plain
-    * token separator in FTS5, never a prefix — pinned against the
-    * sqlite3 binary). Per column, like [[phrase]]; span machinery
-    * shared with NEAR.
-    */
-  def phrasePrefix(cols: Seq[Column], phraseText: String): Column = {
-    val np = parseNearPhrase(attachStar(phraseText))
-    cols.map(c => coalesce(size(spanStarts(tokens(Seq(c)), np)._1) > 0, lit(false)))
-      .reduce(_ || _)
-  }
-
   /** Phrase presence via the span scan (per column, as FTS5): the
     * generic path when per-term prefix flags make the substring fast
     * path inapplicable, and NEAR's single-phrase degenerate case.

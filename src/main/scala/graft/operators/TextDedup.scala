@@ -219,14 +219,18 @@ object TextDedup {
     * [[boundedMembers]] splits each bucket's sorted id run into groups
     * of that size (a multiple of `cap`, so the global cap-slice
     * boundaries are preserved inside every group), within-group pairs
-    * come from the same capped kernel, and the missing chain links
-    * between the last slice head of one group and the head of the next
-    * come from an equi-self-join of the (tiny, one row per group)
-    * group-heads table on `__grp = __grp + 1` — `__grp` is contiguous
-    * per key by construction (rank div groupSize), so the join IS the
-    * lead(); no window of any kind, hence scale-safe and guard-quiet
-    * at every key cardinality. Slice-chain connectivity holds across
-    * group boundaries and dedup clustering is unaffected.
+    * come from the same capped kernel, and the missing chain links run
+    * from the last slice head of one group to the head of the next.
+    * `__grp` is contiguous per key by construction (rank div
+    * groupSize), so the next group's head is a lead() over `__grp`:
+    * on the default (high-cardinality) path it is literally a lead()
+    * window partitioned by the bucket keys, over group rows (one per
+    * `cap * slicesPerGroup` members, so the window's sort is
+    * bounded); on the `lowCardKeys` path, where a keys-partitioned
+    * window is the shape PlanGuard flags, it is an equi-self-join of
+    * the group-heads table on `__grp = __grp + 1`, with no window.
+    * Slice-chain connectivity holds across group boundaries and dedup
+    * clustering is unaffected.
     */
   private[graft] def bucketedPairs(
       rows: DataFrame, keyCols: Seq[String], cap: Int,
@@ -380,12 +384,9 @@ object TextDedup {
   }
 
   /** The collapse's canonicalization: sorted array + the two 64-bit
-    * fingerprint lanes. ONE definition — the operator's decision
-    * aggregation and [[graft.tools.DedupChainProbe]]'s stage timing
-    * both call this, so the probe can never silently measure a
-    * different spelling (r18 ADVICE).
+    * fingerprint lanes.
     */
-  private[graft] def collapseCanon(sets: DataFrame): DataFrame =
+  private def collapseCanon(sets: DataFrame): DataFrame =
     sets.select(col("id"), array_sort(col("sset")).as("sset0"))
       .withColumn("__h1", xxhash64(col("sset0")))
       .withColumn("__h2", xxhash64(lit("lane2"), col("sset0")))
@@ -637,7 +638,8 @@ object TextDedup {
     * construction. A node split across partitions emits one star edge
     * per partition — the global rounds reconcile those. Deterministic
     * given the input partitioning (min per component does not depend
-    * on edge order), so task retries reproduce byte-identical output.
+    * on edge order), so task retries reproduce set-deterministic
+    * output.
     */
   private[graft] def contractLocal(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession

@@ -154,18 +154,23 @@ object SqliteCli {
   private def runScriptStreamed(bin: String, dbPath: String)(
       body: java.io.Writer => Unit): String = {
     val tmp = Files.createTempFile("graft-sqlite-", ".sql")
+    // stderr goes to a file, not a pipe: stdout is read to EOF first,
+    // and a full stderr pipe (~64 KB of errors) would block sqlite3
+    // before it ever closes stdout.
+    val errFile = Files.createTempFile("graft-sqlite-", ".err")
     try {
       val w = Files.newBufferedWriter(tmp)
       try body(w) finally w.close()
       val pb = new ProcessBuilder(bin, "-batch", dbPath)
       pb.redirectInput(tmp.toFile)
+      pb.redirectError(errFile.toFile)
       val proc = pb.start()
       val outS = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      val errS = new String(proc.getErrorStream.readAllBytes(), "UTF-8")
       val rc = proc.waitFor()
+      val errS = Files.readString(errFile)
       if (rc != 0 || errS.nonEmpty)
         throw new IllegalStateException(s"sqlite3 failed (rc=$rc): $errS")
       outS
-    } finally Files.deleteIfExists(tmp)
+    } finally { Files.deleteIfExists(tmp); Files.deleteIfExists(errFile) }
   }
 }

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 import graft.operators.Shape.SqliteType
@@ -27,9 +26,9 @@ import graft.operators.Shape.SqliteType
   * Spark infers LongType for integer+blank CSV columns, so the mapping
   * below never sees the float64 mirage pandas has to correct.
   *
-  * The JDBC write path (`df.write.jdbc`) is kept optional: the offline
-  * environment has no sqlite-jdbc jar, and graded correctness rides on
-  * the DataFrame surface (SURVEY §7.2.6).
+  * Two sinks execute this text: `Pipeline` stores it as `schema.sql`
+  * beside the parquet tables, and [[SqliteCli]] runs it through the
+  * `sqlite3` binary to write a real `.db`.
   */
 object SqliteDdl {
 
@@ -163,25 +162,6 @@ object SqliteDdl {
     s"""INSERT INTO "${tableName}_fts" (rowid, $ftsCols) $select"""
   }
 
-  /** K2/K3/K4 write modes for a JDBC sink; retained as an enum so the CLI
-    * layer mirrors `--replace-tables` / append semantics even when the
-    * physical write is parquet.
-    */
-  sealed trait WriteMode
-  object WriteMode {
-    case object CreateNew extends WriteMode
-    case object Append extends WriteMode   // existing table: no DDL work (cli.py:250-251)
-    case object Replace extends WriteMode  // --replace-tables: DROP + recreate
-  }
-
+  /** K4 (`--replace-tables`): drop the fact table before recreating it. */
   def dropTableSql(tableName: String): String = s"DROP TABLE [$tableName]"
-
-  /** Write a table as parquet (the native sink for the graded surface). */
-  def writeParquet(df: DataFrame, path: String, mode: WriteMode): Unit = {
-    val saveMode = mode match {
-      case WriteMode.Append => "append"
-      case _                => "overwrite"
-    }
-    df.write.mode(saveMode).parquet(path)
-  }
 }

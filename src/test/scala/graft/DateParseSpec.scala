@@ -294,8 +294,8 @@ class DateParseSpec extends AnyFunSuite {
   }
 
   test("multilingual goldens: round-18 tier-5 languages") {
-    // Exact JDK-CLDR FULL (format-context) month names probed via
-    // tools/LocaleProbe on this JDK. Lingala, Romansh, Cornish, ckb
+    // Exact JDK-CLDR FULL (format-context) month names as this JDK's
+    // DateFormatSymbols prints them. Lingala, Romansh, Cornish, ckb
     // and Sakha-May emit MULTI-TOKEN names — dead keys for a
     // single-token scanner, deliberately not goldened.
     val goldens = Seq(

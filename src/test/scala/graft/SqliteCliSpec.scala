@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
+
 import graft.sinks.SqliteCli
 
 /** The reference's ACTUAL output surface — a SQLite `.db` file —
@@ -11,7 +17,7 @@ import graft.sinks.SqliteCli
   * (`tests/test_csvs_to_sqlite.py` test_flat :41-71, test_fts
   * :167-188, test_fts_and_extract_columns :200-229).
   */
-class SqliteCliSpec extends SparkSpec {
+class SqliteCliSpec extends SparkSpec with TimeLimits {
 
   private def dbFile(): String =
     Files.createTempDirectory("graft-realdb").resolve("test.db").toString
@@ -114,6 +120,73 @@ class SqliteCliSpec extends SparkSpec {
     assert(SqliteCli.query(f,
       "SELECT rowid FROM [actors_name_fts] WHERE actors_name_fts MATCH 'Pitt';")
       === Seq(Seq(Some("5"))))
+  }
+
+  /** K4 on a real .db: run 1 writes `Fixtures.CSV` with `flags` to a
+    * store and a .db; run 2 writes one new row with the same flags and
+    * `--replace-tables` over both. Returns the .db and run 2's result.
+    */
+  private def replaceRun(flags: Pipeline.Config => Pipeline.Config): (String, Pipeline.Result) = {
+    val out = Files.createTempDirectory("graft-realdb-out").toString
+    val f = dbFile()
+    val base = flags(cfg(Seq(tempCsv("test.csv", Fixtures.CSV)))).copy(outputDir = Some(out))
+    SqliteCli.writeDb(f, Pipeline.run(spark, base))
+    val csv2 = tempCsv("test.csv",
+      "county,precinct,office,district,party,candidate,votes\nSolano,200001,Governor,,GRN,Jane Doe,12\n")
+    val r = Pipeline.run(spark, base.copy(paths = Seq(csv2), replaceTables = true))
+    SqliteCli.writeDb(f, r)
+    (f, r)
+  }
+
+  private def tableNames(f: String): Seq[String] =
+    SqliteCli.query(f, "SELECT name FROM sqlite_master WHERE type = 'table' ORDER BY name;")
+      .map(_.head.get)
+
+  test("real .db: --replace-tables swaps the fact table for the new rows (K4)") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    val (f, r) = replaceRun(identity)
+    assert(!r.ddl.exists(_.contains("_fts")))
+    assert(tableNames(f) === Seq("test"))
+    assert(SqliteCli.query(f, "SELECT county, candidate, votes FROM [test];")
+      === Seq(Seq(Some("Solano"), Some("Jane Doe"), Some("12"))))
+  }
+
+  test("real .db: --replace-tables with -c keeps the lookup table and reuses its ids (K4, E2)") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    val (f, _) = replaceRun(_.copy(extractColumns = Seq("office")))
+    assert(SqliteCli.query(f, "SELECT count(*) FROM [test];") === Seq(Seq(Some("1"))))
+    val office = SqliteCli.query(f, "SELECT id, value FROM [office] ORDER BY id;")
+      .map(r => (r(0).get, r(1).get))
+    assert(office === Seq("1" -> "President", "2" -> "Proposition 51",
+      "3" -> "State Assembly", "4" -> "Governor"))
+    assert(SqliteCli.query(f, "SELECT office FROM [test];") === Seq(Seq(Some("4"))))
+    assert(SqliteCli.query(f,
+      "SELECT rowid FROM [office_value_fts] WHERE office_value_fts MATCH 'governor';")
+      === Seq(Seq(Some("4"))))
+  }
+
+  test("real .db: --replace-tables with -f drops and rebuilds the FTS table (K4, S10)") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    val (f, _) = replaceRun(_.copy(ftsColumns = Seq("candidate")))
+    assert(SqliteCli.query(f, "SELECT count(*) FROM [test];") === Seq(Seq(Some("1"))))
+    def hits(q: String) =
+      SqliteCli.query(f, s"SELECT rowid FROM [test_fts] WHERE test_fts MATCH '$q';")
+    assert(hits("jane") === Seq(Seq(Some("1"))))
+    assert(hits("gloria") === Nil)
+  }
+
+  test("sqlite3 errors beyond the stderr pipe buffer throw instead of deadlocking") {
+    assume(SqliteCli.binary.isDefined, "no sqlite3 binary on this box")
+    val f = dbFile()
+    val script = (1 to 3000).map(i => s"INSERT INTO missing_table_$i VALUES (1);").mkString("\n")
+    // On its own thread, so a deadlocked call fails the test instead of
+    // hanging the suite; the signaler interrupts the wait, not the call.
+    val call = Future(SqliteCli.query(f, script))(ExecutionContext.global)
+    implicit val signaler: Signaler = ThreadSignaler
+    val e = failAfter(60.seconds) {
+      intercept[IllegalStateException](Await.result(call, Duration.Inf))
+    }
+    assert(e.getMessage.contains("missing_table_3000"))
   }
 
   test("real .db: FTS over EXTRACTED columns matches original strings through lookups") {
